@@ -26,6 +26,7 @@ O(events).
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -282,14 +283,18 @@ class CdcApplyPipeline:
         (see ``_stats_phase``) and the default batch id is slice-qualified
         — each slice of a range is its own idempotency unit.
 
-        Exactly TWO Spark jobs per batch (plus one only when quarantine is
-        non-empty): a single stats pass (counters, per-partition watermarks,
-        touched buckets, schema-evolution column presence) and the
-        dedup+MERGE+write job. Deliberately NO ``.persist()`` of the decoded
-        frame: local-mode cache materialization serializes on the block
-        manager (measured 53 s at 32 threads vs 26 s at 8 on a 505k-event
-        batch — anti-scalable), while recomputing the narrow decode is a
-        fully parallel ~3 s. On a multi-executor cluster the same reasoning
+        Two queries per batch (plus the quarantine write when the batch
+        has invalid rows): a single stats pass (counters, per-partition
+        watermarks, touched buckets, schema-evolution column presence) and
+        the dedup+MERGE+write, whose merge counters are observed on the
+        write rather than computed by a further query. Under AQE a query
+        runs as several Spark jobs (roughly one per shuffle stage), so a
+        batch is more than two jobs; what holds is that each query reads
+        and decodes the batch range once. Deliberately NO ``.persist()``
+        of the decoded frame: local-mode cache materialization serializes
+        on the block manager (measured 53 s at 32 threads vs 26 s at 8 on a
+        505k-event batch — anti-scalable), while recomputing the narrow
+        decode is a fully parallel ~3 s. On a multi-executor cluster the same reasoning
         holds: the decode is cheaper than the cache build + memory pressure.
         """
         if bucket_slice is not None and update_global_hwm:
@@ -343,17 +348,35 @@ class CdcApplyPipeline:
                 F.lit(1).alias("attempts"),
             )
             qdir = f"{self.quarantine_dir}/batch_id={batch_id.replace(':', '_')}"
-            from concurrent.futures import ThreadPoolExecutor
-
             _qpool = ThreadPoolExecutor(max_workers=1)
             quarantine_fut = _qpool.submit(
                 lambda: bad.write.mode("overwrite").parquet(qdir))
             _qpool.shutdown(wait=False)
         pre_commit = quarantine_fut.result if quarantine_fut is not None else None
 
-        # --- job 2: dedup + conditional-LWW MERGE + snapshot commit --------
+        # --- query 2: dedup + conditional-LWW MERGE + snapshot commit ------
         cols = [n for n, _ in TARGET_FIELDS] + ["op"]
         valid = decoded.filter(F.col("is_valid")).select(*cols, *extra)
+        try:
+            m = self._merge_batch(valid, batch_id, touched, part_stats,
+                                  pre_commit)
+        finally:
+            # join the quarantine write on EVERY exit path, not only at the
+            # merge's pre-commit barrier (a merge that finds the batch
+            # already committed never reaches it): no worker thread
+            # outlives the batch, and a failed write is never swallowed
+            if quarantine_fut is not None:
+                wait([quarantine_fut])
+        if quarantine_fut is not None:
+            quarantine_fut.result()
+
+        return self._finish_batch(batch_id, seq_lo, seq_hi, part_stats, qn,
+                                  m, update_global_hwm, t0)
+
+    def _merge_batch(self, valid: DataFrame, batch_id: str,
+                     touched: list[int], part_stats, pre_commit):
+        """Merge one batch's valid rows into the table in the configured
+        mode (MOR appends may trigger a compaction)."""
         if self.mode == "mor":
             coal = None
             if self.mor_fast_path and self.mor_append_rows_per_task:
@@ -389,13 +412,10 @@ class CdcApplyPipeline:
             if due or deep:
                 self.table.compact(f"compact:{batch_id}")
                 self._batches_since_compact = 0
-        else:
-            m = self.table.merge(valid, batch_id, touched_buckets=touched,
-                                 collect_metrics=self.collect_metrics,
-                                 pre_commit=pre_commit)
-
-        return self._finish_batch(batch_id, seq_lo, seq_hi, part_stats, qn,
-                                  m, update_global_hwm, t0)
+            return m
+        return self.table.merge(valid, batch_id, touched_buckets=touched,
+                                collect_metrics=self.collect_metrics,
+                                pre_commit=pre_commit)
 
     def _finish_batch(self, batch_id: str, seq_lo: int, seq_hi: int,
                       part_stats, qn: int, m, update_global_hwm: bool,
@@ -426,6 +446,7 @@ class CdcApplyPipeline:
             "seq_hi": seq_hi,
             "n_in": n_in,
             "n_quarantined": qn,
+            "n_source": m.n_source,
             "n_inserted": m.n_inserted,
             "n_updated": m.n_updated,
             "n_stale_ignored": m.n_stale_ignored,
@@ -462,8 +483,6 @@ class CdcApplyPipeline:
         merge's serial write/commit tail leaves cores idle that the
         prefetch back-fills; small-parallelism runs stay sequential.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         if pipelined is None:
             pipelined = self.spark.sparkContext.defaultParallelism >= 16
         self.quarantine_malformed_source()

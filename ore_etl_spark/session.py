@@ -24,6 +24,19 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else a quarter of physical memory
+    (at most 48 GiB, at least 1 GiB). Local mode runs the whole engine in
+    the driver JVM, which grows its heap toward the maximum before
+    collecting; the Python workers, the page cache and other processes
+    need the rest of the machine."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    total_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 << 10, max(1 << 10, total_mib // 4))}m"
+
+
 def get_spark(
     app_name: str = "ore-etl-spark",
     cpus: int | None = None,
@@ -51,7 +64,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         # v2 committer: task-side renames — the v1 driver-side sequential
         # rename of per-bucket output files is a serial tail that caps
         # scaling (measured ~10s/batch at 64 buckets)

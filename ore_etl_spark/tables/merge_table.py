@@ -73,7 +73,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -185,6 +185,11 @@ def keys_eq_null_safe(alias_a: str, alias_b: str, cols: list[str]):
 
 @dataclass
 class MergeMetrics:
+    """Per-commit counters. ``n_source`` counts the source rows the commit
+    consumed (COW: after in-batch dedup; MOR: rows appended). MOR cannot
+    tell inserts from updates without a target read, so its
+    ``n_inserted``/``n_updated``/``n_stale_ignored`` stay 0 and
+    ``n_deleted`` counts tombstones appended."""
     batch_id: str
     version: int
     n_source: int = 0
@@ -804,6 +809,12 @@ class MergeTable:
                          + [T.StructField(_DELETED_COL, T.BooleanType(), True)]),
         )
         src = src.withColumn(_BUCKET_COL, self.bucket_expr(snap))
+        # rows and tombstones appended, observed on the write itself (a
+        # narrow node: the fast path's no-Exchange plan is unchanged)
+        obs = Observation()
+        src = src.observe(
+            obs, F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col(_DELETED_COL), 1).otherwise(0)).alias("del"))
 
         rel_dir = self._attempt_dir(snap)
         out_dir = os.path.join(self.root, rel_dir)
@@ -813,6 +824,7 @@ class MergeTable:
         elif write_coalesce:
             src = src.coalesce(max(1, int(write_coalesce)))
         src.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir)
+        observed = obs.get
 
         written = self._list_written(out_dir, rel_dir)
         if pre_commit is not None:
@@ -825,6 +837,8 @@ class MergeTable:
             return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
                                 skipped_already_committed=True)
         m = MergeMetrics(batch_id=batch_id, version=new_snap["version"],
+                         n_source=observed["rows"] or 0,
+                         n_deleted=observed["del"] or 0,
                          n_buckets_touched=len(written))
         self._append_lineage(self._lineage_rows(batch_id, m.version, m))
         return m
@@ -1083,6 +1097,10 @@ class MergeTable:
                 for r in src.select(_BUCKET_COL).distinct().collect()
             )
         if not touched:
+            # an all-invalid batch still has a quarantine to make durable
+            # before its batch_id becomes visible (replay skips it after)
+            if pre_commit is not None:
+                pre_commit()
             new_snap, skipped = self._cas_commit(snap, batch_id, [], set())
             return MergeMetrics(batch_id=batch_id, version=new_snap["version"],
                                 skipped_already_committed=skipped)
@@ -1141,9 +1159,14 @@ class MergeTable:
 
         metrics = MergeMetrics(batch_id=batch_id, version=snap["version"] + 1,
                                n_buckets_touched=len(touched))
+        # the counters are observed on the write, so the merge plan runs
+        # once. A fresh Observation per attempt: a CommitConflict retry
+        # must never read the previous attempt's counts.
+        obs = None
         if collect_metrics:
-            merged = merged.persist()
-            agg = merged.agg(
+            obs = Observation()
+            merged = merged.observe(
+                obs,
                 F.sum(F.when(F.col("_action") == "insert", 1).otherwise(0)).alias("ins"),
                 F.sum(F.when(F.col("_action") == "update", 1).otherwise(0)).alias("upd"),
                 F.sum(F.when(F.col("_action") == "stale", 1).otherwise(0)).alias("stale"),
@@ -1151,12 +1174,7 @@ class MergeTable:
                     F.when((F.col("_action").isin("insert", "update"))
                            & F.col(_DELETED_COL), 1).otherwise(0)
                 ).alias("del"),
-            ).collect()[0]
-            metrics.n_inserted = agg["ins"] or 0
-            metrics.n_updated = agg["upd"] or 0
-            metrics.n_stale_ignored = agg["stale"] or 0
-            metrics.n_deleted = agg["del"] or 0
-            merged = merged.drop("_action")
+            ).drop("_action")
 
         # --- write new files for touched buckets --------------------------
         # attempt-unique directory: racing writers from the same parent must
@@ -1165,8 +1183,14 @@ class MergeTable:
         out_dir = os.path.join(self.root, rel_dir)
         (merged.repartition(max(1, min(len(touched), 200)), F.col(_BUCKET_COL))
                .write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(out_dir))
-        if collect_metrics:
-            merged.unpersist()
+        if obs is not None:
+            agg = obs.get
+            metrics.n_inserted = agg["ins"] or 0
+            metrics.n_updated = agg["upd"] or 0
+            metrics.n_stale_ignored = agg["stale"] or 0
+            metrics.n_deleted = agg["del"] or 0
+            metrics.n_source = (metrics.n_inserted + metrics.n_updated
+                                + metrics.n_stale_ignored)
 
         written = self._list_written(out_dir, rel_dir)
 
@@ -1461,6 +1485,7 @@ class MergeTable:
             {
                 "batch_id": batch_id,
                 "version": version,
+                "n_source": m.n_source,
                 "n_inserted": m.n_inserted,
                 "n_updated": m.n_updated,
                 "n_stale_ignored": m.n_stale_ignored,

@@ -169,3 +169,42 @@ def test_crash_before_checkpoint_does_not_double_fold(spark, source, tmpdir_path
     source.merge(df(spark, [("r", "b", 3, 0, "py", 1.0, "INSERT")]), "b3")
     assert view.refresh()["mode"] == "incremental"
     assert view_state(view) == brute(source)  # 51.0, not 96.0 double-fold
+
+
+def test_incremental_refresh_evaluates_changelog_once(spark, source, tmpdir_path,
+                                                      monkeypatch):
+    """The merge reads its source twice (touched buckets, then the write);
+    the refresh must still evaluate each changelog row exactly once, not
+    re-read both snapshot sides per pass."""
+    view = make_view(spark, source, tmpdir_path)
+    rows = [("r", f"p{i}", 1, i, "py" if i % 2 else "go", float(i))
+            for i in range(20)]
+    source.merge(df(spark, [(*r, "INSERT") for r in rows]), "b1")
+    view.refresh()
+    source.merge(df(spark, [
+        ("r", "p1", 2, 0, "go", 10.0, "UPDATE"),
+        ("r", "p2", 2, 1, "go", 20.0, "UPDATE"),
+        ("r", "p3", 2, 2, None, None, "DELETE"),
+        ("r", "q0", 2, 3, "rs", 1.0, "INSERT"),
+    ]), "b2")
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tick(_):
+        evaluated.add(1)
+        return True
+
+    tick_udf = F.udf(tick, T.BooleanType()).asNondeterministic()
+    changes = source.changes
+    n_changelog = []
+
+    def counted_changes(*a, **k):
+        d = changes(*a, **k)
+        n_changelog.append(d.count())
+        return d.filter(tick_udf(F.col("_change_type")))
+
+    monkeypatch.setattr(source, "changes", counted_changes)
+    assert view.refresh()["mode"] == "incremental"
+    assert n_changelog and n_changelog[0] > 0
+    assert evaluated.value == n_changelog[0]
+    assert view_state(view) == brute(source)

@@ -169,3 +169,134 @@ def test_update_where_repair_pass(spark, tmpdir_path):
     m2 = tbl.update_where(F.col("content") == "broken",
                           {"content": F.lit("repaired")}, "fix-1")
     assert m2.skipped_already_committed
+
+
+# ---- counters observed on the write --------------------------------------
+BASE = [
+    ("a", "x", 1, 0, "v1", "INSERT"),
+    ("a", "y", 1, 1, "v1", "INSERT"),
+    ("b", "z", 1, 2, "v1", "INSERT"),
+    ("c", "w", 1, 3, "v1", "INSERT"),
+]
+BATCH = [
+    ("a", "x", 2, 0, "v2", "UPDATE"),
+    ("a", "x", 3, 0, "v3", "UPDATE"),   # in-batch duplicate key, wins
+    ("a", "y", 0, 9, "old", "UPDATE"),  # older than the target: stale
+    ("b", "z", 2, 1, None, "DELETE"),   # update that tombstones
+    ("c", "w", 1, 3, "same", "UPDATE"),  # equal version: stale
+    ("d", "q", 1, 4, "v1", "INSERT"),
+    ("e", "r", 1, 5, None, "DELETE"),   # delete of an unseen key
+]
+
+
+def expected_counters(target, batch):
+    """The conditional-LWW classification the merge counts, in Python:
+    ``target`` maps key -> stored version (tombstones included)."""
+    win = {}
+    for repo, path, cs, es, _, op in batch:
+        k, v = (repo, path), (cs, es)
+        if k not in win or v > win[k][0]:
+            win[k] = (v, op == "DELETE")
+    n = {"ins": 0, "upd": 0, "stale": 0, "del": 0}
+    for k, (v, deleted) in win.items():
+        if k not in target:
+            n["ins"] += 1
+        elif v > target[k]:
+            n["upd"] += 1
+        else:
+            n["stale"] += 1
+            continue
+        n["del"] += deleted
+    return n
+
+
+def counters(m):
+    return {"ins": m.n_inserted, "upd": m.n_updated,
+            "stale": m.n_stale_ignored, "del": m.n_deleted}
+
+
+def test_observed_counters_match_lww_classification(spark, tmpdir_path):
+    tbl = make_table(spark, tmpdir_path)
+    tbl.merge(df(spark, BASE), "b1")
+    m = tbl.merge(df(spark, BATCH), "b2")
+    target = {(r[0], r[1]): (r[2], r[3]) for r in BASE}
+    exp = expected_counters(target, BATCH)
+    assert exp == {"ins": 2, "upd": 2, "stale": 2, "del": 2}
+    assert counters(m) == exp
+    assert m.n_source == 6  # deduped source rows
+    lin = tbl.lineage()[-1]
+    assert (lin["n_inserted"], lin["n_updated"], lin["n_stale_ignored"],
+            lin["n_deleted"], lin["n_source"]) == (2, 2, 2, 2, 6)
+
+
+def test_observed_counters_recomputed_on_commit_conflict(spark, tmpdir_path):
+    """A peer commits into the batch's bucket between the write and the
+    CAS: the retry recomputes against the fresh snapshot with a fresh
+    observation, so the counters describe the commit that landed."""
+    from ore_etl_spark.tables.merge_table import CommitConflict
+
+    tbl = make_table(spark, tmpdir_path)
+    tbl.merge(df(spark, BASE), "b1")
+    peer = MergeTable.load(spark, tbl.root)
+    cas = tbl._cas_commit
+    conflicts = []
+
+    def racing_cas(*a, **k):
+        if not conflicts:
+            peer.merge(df(spark, [("a", "x", 5, 0, "peer", "UPDATE")]), "peer")
+            try:
+                return cas(*a, **k)
+            except CommitConflict:
+                conflicts.append(1)
+                raise
+        return cas(*a, **k)
+
+    tbl._cas_commit = racing_cas
+    m = tbl.merge(df(spark, BATCH), "b2")
+    assert conflicts  # the first attempt really lost the race
+    target = {(r[0], r[1]): (r[2], r[3]) for r in BASE}
+    target[("a", "x")] = (5, 0)
+    exp = expected_counters(target, BATCH)
+    assert exp == {"ins": 2, "upd": 1, "stale": 3, "del": 2}
+    assert counters(m) == exp
+    assert state(tbl)[("a", "x")] == (5, "peer")
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_counters_add_no_spark_jobs(spark, tmpdir_path):
+    """The counters ride the write: a merge that collects them runs no
+    more Spark jobs than the same merge without them."""
+    import uuid
+
+    jobs = {}
+    for collect in (False, True):
+        tbl = make_table(spark, f"{tmpdir_path}/{collect}")
+        tbl.merge(df(spark, BASE), "b1")
+        group = f"merge-{collect}-{uuid.uuid4().hex}"
+        jobs[collect] = _jobs_in_group(
+            spark, group,
+            lambda: tbl.merge(df(spark, BATCH), "b2", collect_metrics=collect))
+    assert 0 < jobs[True] <= jobs[False], jobs
+
+
+def test_mor_append_reports_rows_and_tombstones(spark, tmpdir_path):
+    """merge_mor counts what it appends: n_source rows, n_deleted of them
+    tombstones (after the in-batch dedup when it runs)."""
+    tbl = make_table(spark, tmpdir_path)
+    fast = tbl.merge_mor(df(spark, BATCH), "m1", dedup_in_batch=False,
+                         bucket_shuffle=False)
+    assert (fast.n_source, fast.n_deleted) == (7, 2)
+    deduped = tbl.merge_mor(df(spark, BATCH), "m2")
+    assert (deduped.n_source, deduped.n_deleted) == (6, 2)
+    lin = tbl.lineage()
+    assert [(r["n_source"], r["n_deleted"]) for r in lin] == [(7, 2), (6, 2)]

@@ -138,3 +138,25 @@ def test_fastpath_append_width_tracks_batch_rows(spark, tmpdir_path, wal):
     a = {tuple(r) for r in wide.table.read().select(*cols).collect()}
     b = {tuple(r) for r in narrow.table.read().select(*cols).collect()}
     assert a == b
+
+
+def test_mor_batch_record_counts_appended_rows(spark, tmpdir_path, wal):
+    """The MOR append observes what it writes: metrics.jsonl and lineage
+    carry the rows appended and the tombstones among them, not zeros."""
+    import json
+
+    from ore_etl_spark.operators.decode import decode_events
+
+    p = build(spark, tmpdir_path, wal, mor_fast_path=True)
+    (rec,) = p.run(batch_span=None)
+    valid = decode_events(spark.read.parquet(wal)).filter(F.col("is_valid"))
+    n_del = valid.filter(F.col("op") == "DELETE").count()
+    assert n_del > 0
+    assert rec["n_source"] == rec["n_in"] - rec["n_quarantined"] == valid.count()
+    assert rec["n_deleted"] == n_del
+    with open(f"{tmpdir_path}/state/metrics.jsonl") as f:
+        logged = [json.loads(line) for line in f if line.strip()]
+    assert (logged[-1]["n_source"], logged[-1]["n_deleted"]) == (
+        rec["n_source"], n_del)
+    lin = p.table.lineage()[-1]
+    assert (lin["n_source"], lin["n_deleted"]) == (rec["n_source"], n_del)
